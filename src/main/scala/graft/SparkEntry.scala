@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.CleanFns._
 import graft.operators.{Dedup, Quarantine, Upsert}
 import graft.analytics.{EventAnalytics, InferenceAnalytics, StarAnalytics, StatsAnalytics}
+import graft.streaming.EventStream.rocksDbStore
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with DuckDB oracle SQL over the same fixture tables.
@@ -32,6 +33,14 @@ object SparkEntry {
     * half-written files. */
   private[graft] val scratchRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_TMP", "target/tmp")
+
+  /** Shuffle width the stateful streaming queries run at, scoped with
+    * `GraftSession.withConf`. Stateful shuffle partitions are pinned at
+    * query start and each one carries a state-store instance + per-batch
+    * checkpoint file — at fixture volume 8 is the right width (32 costs
+    * ~1.6× warm, ~4× cold). On a real cluster this is sized to executor
+    * count, not inherited from the batch shuffle width. */
+  private val streamWidth = "spark.sql.shuffle.partitions" -> "8"
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -874,111 +883,55 @@ object SparkEntry {
         .orderBy("user_id", "session_start")),
 
     // ---- streaming: event-time rollup drained via AvailableNow ----
-    "q_stream_hourly_counts" -> ((s, d) => {
-      // Stateful shuffle partitions are pinned at query start and each one
-      // carries a state-store instance + per-batch checkpoint file — at
-      // this volume 8 is the right width (32 costs ~1.6× warm, ~4× cold).
-      // On a real cluster this is sized to executor count, not inherited
-      // from the batch shuffle width. Restored after the drain.
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_stream_hourly_counts" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.runAvailableNow(
             graft.streaming.EventStream.hourlyCounts(stream), "complete")
           .orderBy("hour_start", "event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- streaming: custom keyed state (mapGroupsWithState) drained ----
-    "q_stateful_totals" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_stateful_totals" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.drainStatefulLatest(
             graft.streaming.EventStream.statefulUserTotals(stream),
             Seq("user_id"), "n_events")
           .orderBy("user_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- streaming: transformWithState (Spark 4 typed state + RocksDB) --
-    "q_tws_user_stats" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+    "q_tws_user_stats" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth, rocksDbStore) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.drainStatefulLatest(
             graft.streaming.EventStream.twsUserStats(stream),
             Seq("user_id"), "n_events")
           .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    }),
+      }),
 
-    "q_tws_type_counts" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+    "q_tws_type_counts" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth, rocksDbStore) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.drainStatefulLatest(
             graft.streaming.EventStream.twsTypeCounts(stream),
             Seq("user_id", "event_type"), "n_events")
           .orderBy("user_id", "event_type")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    }),
+      }),
 
-    "q_tws_last_n" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+    "q_tws_last_n" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth, rocksDbStore) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.drainStatefulLatest(
             graft.streaming.EventStream.twsLastN(stream),
             Seq("user_id"), "n_seen")
           .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    }),
+      }),
 
     // ---- streaming drift monitor: converges to the batch PSI ----
-    "q_stream_psi" -> ((s, d) => {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+    "q_stream_psi" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth, rocksDbStore) {
         // the fixed split point is monitor CONFIG (an unbounded stream has
         // no max date) — derived here from the bounded fixture by a one-row
         // batch pre-pass, mirroring the batch operator's midpoint
@@ -996,26 +949,16 @@ object SparkEntry {
             Seq("event_type"), "n_seen")
           .drop("n_seen")
           .orderBy("event_type")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    }),
+      }),
 
     // ---- streaming: flatMapGroupsWithState (0..n rows per key/batch) ----
-    "q_threshold_alerts" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_threshold_alerts" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream.runAvailableNow(
             graft.streaming.EventStream.thresholdAlerts(stream), "append")
           .orderBy("user_id", "level")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- S5 + G7–G13 + F4–F6: Kaggle normalizer composite paths ----
     "q_kaggle_events" -> ((s, d) =>
@@ -1197,15 +1140,13 @@ object SparkEntry {
       StarAnalytics.dormantCustomers(s, d)),
 
     // ---- streaming: watermarked stream-stream attribution join ----
-    "q_stream_attribution" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
+    "q_stream_attribution" -> ((s, d) =>
       // A stream-stream join keeps FOUR state stores per partition (left/
       // right × keyWithIndex/keyToNumValues), so its per-partition fixed
       // cost is higher than single-operator stateful queries (which pin 8
       // here) — 4 measures ~15% faster at fixture volume. Cluster-scale
       // sizing follows executor count, as with the other streaming queries.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val ev = graft.streaming.EventStream.readEventsStream(s, d)
         val joined = graft.streaming.EventStream.attributionJoin(
           ev.filter(col("event_type") === "signup"),
@@ -1214,8 +1155,7 @@ object SparkEntry {
           .select(col("signup_id"), col("purchase_id"),
             col("s_user").as("user_id"))
           .orderBy("signup_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- ext: binned range join (attribution window; no per-key blow-up) ----
     "q_range_join" -> ((s, d) => {
@@ -1421,10 +1361,8 @@ object SparkEntry {
       graft.ext.Similarity.annRecall(Tables.embeddings(s, d))),
 
     // ---- streaming: stream-static dimension enrichment ----
-    "q_stream_enrich" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_stream_enrich" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val ev = graft.streaming.EventStream.readEventsStream(s, d)
           .filter(col("user_id").isNotNull)
         val dim = Tables.customer(s, d)
@@ -1434,22 +1372,18 @@ object SparkEntry {
             graft.streaming.EventStream.enrichCounts(ev, dim,
               "user_id", "c_custkey", "c_nationkey"), "complete")
           .orderBy("c_nationkey")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- streaming: watermark-bounded semantic dedup ----
-    "q_stream_dedup" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_stream_dedup" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val stream = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream
           .runAvailableNow(
             graft.streaming.EventStream.streamKeyDedup(stream), "append")
           .select(col("user_id"), col("event_type"), col("minute"))
           .orderBy("user_id", "event_type", "minute")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
 
     // ---- TPC-H anchors, round 2: Q4/Q14/Q16/Q17/Q18/Q19/Q22 shapes ----
     "q_late_priority" -> ((s, d) =>
@@ -2237,17 +2171,14 @@ object SparkEntry {
     "q_pq_recall" -> ((s, d) =>
       graft.ext.Similarity.pqRecall(Tables.embeddings(s, d))),
     // stream-stream interval join: purchases within 30min of a click
-    "q_stream_interval_join" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    "q_stream_interval_join" -> ((s, d) =>
+      GraftSession.withConf(s, streamWidth) {
         val ev = graft.streaming.EventStream.readEventsStream(s, d)
         graft.streaming.EventStream
           .runAvailableNow(
             graft.streaming.EventStream.streamIntervalJoin(ev), "append")
           .orderBy("user_id", "click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }),
+      }),
     // exact Shapley channel attribution over (user, day) coalitions
     "q_shapley_attribution" -> ((s, d) =>
       EventAnalytics.shapleyAttribution(Tables.events(s, d))),

@@ -23,13 +23,14 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which vanilla
     * Spark 4 rejects with [PARQUET_TYPE_ILLEGAL]) and plain TIMESTAMP(MICROS),
-    * depending on the fixture generation. Adapt to whichever arrives: with
-    * the nanosAsLong conf set, a NANOS column loads as LongType — truncate it
-    * to micros with integer DIV (never a double divide, ns epochs exceed
-    * 2^53); a MICROS column loads as a real timestamp and passes through
-    * untouched. DuckDB oracles mirror both with CAST(ts AS TIMESTAMP). */
+    * depending on the fixture generation. Adapt to whichever arrives: under
+    * the nanosAsLong conf every `GraftSession` carries, a NANOS column
+    * loads as LongType — truncate it to micros with integer DIV (never a
+    * double divide, ns epochs exceed 2^53); a MICROS column loads as a real
+    * timestamp and passes through untouched. DuckDB oracles mirror both
+    * with CAST(ts AS TIMESTAMP). The loader reads the session's conf and
+    * never writes it. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -281,6 +281,12 @@ object EventStream {
 
   private val nameCounter = new AtomicLong(0)
 
+  /** State-store provider conf the transformWithState operators below
+    * require; scope it with `GraftSession.withConf(spark, rocksDbStore)`. */
+  val rocksDbStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Streaming scan of the events fixture. Same dtype-adaptive `ts` handling
     * as `graft.Tables.events` (NANOS-as-long → DIV-1000 truncation; native
     * MICROS timestamp → pass-through); the schema is probed with a batch
@@ -291,7 +297,6 @@ object EventStream {
       .empty[String, org.apache.spark.sql.types.StructType]
 
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     // probe the schema once per (path, mtime), not per streaming query
     // (each probe is a full file-footer read + job). The mtime in the key
@@ -503,9 +508,8 @@ object EventStream {
   /** Running per-user stats via Spark 4's `transformWithState` — the
     * arbitrary-stateful-processing successor to mapGroupsWithState: typed
     * state cells (Value/List/Map) with per-state TTL, timers, and a
-    * RocksDB-backed store. Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (the caller sets it; the HDFS-backed
+    * RocksDB-backed store. Requires the [[rocksDbStore]] provider (the
+    * caller scopes it with `GraftSession.withConf`; the HDFS-backed
     * default store does not support this operator). Update-mode output:
     * one row per touched key per batch; `n_events` is monotone per key,
     * so `drainStatefulLatest` recovers the final state under any batch

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan of selected
   * SparkEntry queries (all when no names given). Dev tool, not part of the
   * driver contract. Runs with `spark.graft.pins=off` so the lazy
@@ -19,18 +17,12 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // SPARK_GRAFT_PINS=on dumps the EXECUTED shape (pins truncate the
-      // lineage but exchange/join counts match what actually runs);
-      // default off shows scans/filters end to end (iterative queries
-      // re-expand shared subtrees, so node counts are inflated there).
-      .config("spark.graft.pins",
-        sys.env.getOrElse("SPARK_GRAFT_PINS", "off"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_PINS=on dumps the EXECUTED shape (pins truncate the
+    // lineage but exchange/join counts match what actually runs);
+    // default off shows scans/filters end to end (iterative queries
+    // re-expand shared subtrees, so node counts are inflated there).
+    val spark = graft.GraftSession.local(4,
+      "spark.graft.pins" -> sys.env.getOrElse("SPARK_GRAFT_PINS", "off"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       graft.SparkEntry.queries.get(n).foreach { fn =>

@@ -14,8 +14,8 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed tables join with zero exchanges in the plan") {
     val tmp = Files.createTempDirectory("graft_bucketing").toString
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val facts = (1 to 1000).map(i => (i.toLong % 97, i.toLong, i * 1.5))
         .toDF("k", "id", "v")
       val dims = (0L until 97L).map(k => (k, s"name_$k")).toDF("k", "name")
@@ -39,7 +39,6 @@ class BucketingSpec extends SparkSpec {
     } finally {
       spark.sql("DROP TABLE IF EXISTS b_facts")
       spark.sql("DROP TABLE IF EXISTS b_dims")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 }

@@ -12,20 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * doGenCode throws instead, and cross-checks each expression's codegen
   * value against its interpreted value on the same rows. */
 class CodegenSpec extends AnyFunSuite {
-  // A dedicated session: getOrCreate() would reuse SparkSpec's session
-  // and ignore these confs, so go through a fresh session with the
-  // strict flags. SparkSession confs are per-session (SQLConf), so this
-  // coexists with the shared-context suites.
-  lazy val strict: SparkSession = {
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = base.newSession()
-    s.conf.set("spark.sql.codegen.fallback", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+  private def registerAll(s: SparkSession): SparkSession = {
     graft.plans.TextSketches.register(s)
     graft.plans.VectorOps.register(s)
     graft.plans.PHash63.register(s)
@@ -34,16 +21,20 @@ class CodegenSpec extends AnyFunSuite {
     graft.plans.TokenStats.register(s)
     s
   }
+  // A dedicated session: getOrCreate() would reuse SparkSpec's session
+  // and ignore these confs, so go through a fresh session with the
+  // strict flags. SparkSession confs are per-session (SQLConf), so this
+  // coexists with the shared-context suites.
+  lazy val strict: SparkSession = {
+    val s = GraftSession.local(4).newSession()
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    registerAll(s)
+  }
   lazy val lax: SparkSession = {
     val s = strict.newSession()
     s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    graft.plans.TextSketches.register(s)
-    graft.plans.VectorOps.register(s)
-    graft.plans.PHash63.register(s)
-    graft.plans.RollingHash.register(s)
-    graft.plans.JaroWinklerSim.register(s)
-    graft.plans.TokenStats.register(s)
-    s
+    registerAll(s)
   }
 
   private val exprs = Seq(

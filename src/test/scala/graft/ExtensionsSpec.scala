@@ -12,14 +12,8 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(2,
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     try {
       val row = spark.sql(
         """SELECT

@@ -11,6 +11,9 @@ class PlanShapeSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+  private val noAutoBroadcast = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+  private val noAqeBroadcast =
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"
 
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -202,18 +205,15 @@ class PlanShapeSpec extends SparkSpec {
     // auto-broadcasts. The explicitly-broadcast fixed dims must still
     // broadcast; the scaling joins must fall back to shuffle strategies;
     // and the ANSWER must not change with the strategy.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
     val expected = StarAnalytics.regionRevenue(spark, sf).collect()
-    spark.conf.set(key, "-1")
-    try {
+    GraftSession.withConf(spark, noAutoBroadcast) {
       val df = StarAnalytics.regionRevenue(spark, sf)
       val plan = physical(df)
       assert(plan.contains("SortMergeJoin") ||
         plan.contains("ShuffledHashJoin"), plan.take(600))
       assert(plan.contains("BroadcastHashJoin")) // forced dims unaffected
       assert(df.collect().toSeq == expected.toSeq)
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("pagerank rank join carries no forced broadcast — degrades to a " +
@@ -222,11 +222,7 @@ class PlanShapeSpec extends SparkSpec {
     // node frame outgrows memory. With every broadcast threshold disabled, a
     // hint would STILL plan a BroadcastExchange; hint-free code must fall
     // back to shuffle strategies.
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.get(k, "10MB"))
-    keys.foreach(spark.conf.set(_, "-1"))
-    try {
+    GraftSession.withConf(spark, noAutoBroadcast, noAqeBroadcast) {
       val edges = Seq((1L, 2L, 1.0), (2L, 1L, 1.0), (2L, 3L, 2.0),
         (3L, 2L, 2.0)).toDF("src", "dst", "w")
       val nodes = edges.select(col("src").as("id")).distinct()
@@ -237,7 +233,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(!plan.contains("BroadcastExchange"), plan.take(600))
       assert(plan.contains("SortMergeJoin") ||
         plan.contains("ShuffledHashJoin"), plan.take(600))
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("important-parts supplier join carries no forced broadcast — " +
@@ -245,15 +241,11 @@ class PlanShapeSpec extends SparkSpec {
     // Same 100× hazard class as the pagerank rank frame: the supplier
     // subset scales with the catalog. Only the fixed nation dim and the
     // one-row total may keep hard hints.
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.get(k, "10MB"))
-    keys.foreach(spark.conf.set(_, "-1"))
-    try {
+    GraftSession.withConf(spark, noAutoBroadcast, noAqeBroadcast) {
       val plan = physical(StarAnalytics.importantParts(spark, sf))
       assert(plan.contains("SortMergeJoin") ||
         plan.contains("ShuffledHashJoin"), plan.take(600))
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("z-order layout key stays inside whole-stage codegen") {
@@ -382,13 +374,10 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("ObjectHashAggregate"), plan.take(600))
     // no broadcast HINT on freq: degrading under a disabled auto-broadcast
     // threshold proves nothing is pinned to executor memory
-    val noAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, noAutoBroadcast) {
       val degraded = physical(graft.ext.EvalOps.itemCFUncached(spark, sf))
       assert(!degraded.contains("BroadcastHashJoin"), degraded.take(600))
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", noAuto)
+    }
   }
 
   test("isotonic minimax runs over the centile aggregate, never documents") {

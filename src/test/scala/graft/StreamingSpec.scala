@@ -134,11 +134,7 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState stats equal the batch aggregate across " +
     "micro-batches (RocksDB store)") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, EventStream.rocksDbStore) {
       val dir = Files.createTempDirectory("graft_tws_").toString
       val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
       ev.repartition(4).write.mode("overwrite").parquet(dir)
@@ -155,9 +151,6 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.count() === batch.count())
       assert(streamed.exceptAll(batch).isEmpty &&
         batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 
@@ -198,11 +191,7 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState PSI monitor converges to the batch psiDrift " +
     "across micro-batches (RocksDB store)") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, EventStream.rocksDbStore) {
       val dir = Files.createTempDirectory("graft_twspsi_").toString
       val ev = Tables.events(spark, sf)
         .filter(col("value").isNotNull && col("ts").isNotNull &&
@@ -224,19 +213,12 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.count() === batch.count())
       assert(streamed.exceptAll(batch).isEmpty &&
         batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 
   test("transformWithState MapState sub-keyed counts equal the batch " +
     "rollup across micro-batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, EventStream.rocksDbStore) {
       val dir = Files.createTempDirectory("graft_twsmap_").toString
       val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
       ev.repartition(4).write.mode("overwrite").parquet(dir)
@@ -251,19 +233,12 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.count() === batch.count())
       assert(streamed.exceptAll(batch).isEmpty &&
         batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 
   test("transformWithState ListState ring buffer is input-set pure " +
     "across micro-batches") {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, EventStream.rocksDbStore) {
       val dir = Files.createTempDirectory("graft_twslist_").toString
       val ev = Tables.events(spark, sf).filter(col("user_id").isNotNull)
       ev.repartition(4).write.mode("overwrite").parquet(dir)
@@ -287,9 +262,6 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.count() === batch.count())
       assert(streamed.exceptAll(batch).isEmpty &&
         batch.exceptAll(streamed).isEmpty)
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
     }
   }
 
@@ -371,11 +343,7 @@ class StreamingSpec extends SparkSpec {
   test("event-time TIMERS close the trailing session once the watermark " +
     "passes it; mid-stream sessions close inline (RocksDB store)") {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, EventStream.rocksDbStore) {
       val root = Files.createTempDirectory("graft_timer_").toString
       val src = s"$root/in"
       val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -407,11 +375,6 @@ class StreamingSpec extends SparkSpec {
       assert(got.contains((9L, at(240).getTime, 1L)), got.toString)
       assert(!got.exists(r => r._1 == 9L && r._2 == at(480).getTime),
         got.toString)
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
     }
   }
 }
